@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Num, Tables}
+import graft.scale.Bounded
 
 /** Pairwise-preference aggregation — the RLHF-data tier: given a stream
   * of head-to-head outcomes ("A was preferred over B"), estimate a
@@ -64,19 +65,6 @@ object Preference {
     * ([[btRatingSeOf]]) evaluates its Fisher information at the SAME
     * fixed point the published ratings come from.
     */
-  /** Collected-MM budget in rows of the (i < j) game relation; override
-    * with spark conf `spark.graft.bt.collectPairs` (0 disables). The
-    * graph is pair-bounded by construction (co-occurring player pairs,
-    * ≤ C(players, 2)): at sf0.1 it is ~3×10⁵ rows — driver-trivial —
-    * while each MM round of the DataFrame loop costs a fixed ~3 jobs
-    * (two broadcast builds + the checkpoint materialization) that the
-    * r12 PERF scaling block measured core-count-INVARIANT (c8/c32 ratio
-    * 0.68–0.87: pure scheduling floor, not compute). Past the budget
-    * (a genuinely large player universe) the broadcast-join loop below
-    * is unchanged — the 100 TB path never collects.
-    */
-  val BtCollectPairsDefault = 1000000L
-
   /** Scalar twin of Num.r: floor(x·10^s + 0.5)/10^s over doubles — the
     * identical IEEE expression (Spark's floor-to-LONG and math.floor
     * agree wherever |x·10^s| < 2⁶³, which every snapped MM quantity
@@ -170,11 +158,8 @@ object Preference {
     // CERTIFIED-BOUNDED fast path: one count on the checkpointed graph
     // is the certificate (VERDICT r12 #3 — the MM loop's cost at gate
     // scales is per-round job floor, not compute).
-    val btBudget = g.sparkSession.conf
-      .get("spark.graft.bt.collectPairs", BtCollectPairsDefault.toString).toLong
-    val allLong = Seq("i", "j", "n", "w").forall(c =>
-      g.schema(c).dataType == org.apache.spark.sql.types.LongType)
-    if (allLong && g.count() <= btBudget) return btFitLocal(g)
+    if (Bounded.allLong(g, "i", "j", "n", "w") &&
+        Bounded.fits(g.sparkSession, Bounded.BtPairs)(g.count())) return btFitLocal(g)
     val sym = g.select(col("i"), col("j"), col("n"), col("w"))
       .unionByName(g.select(col("j").as("i"), col("i").as("j"), col("n"),
         (col("n") - col("w")).as("w")))

@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Num, Tables}
-import graft.scale.{Dedup, Partitioning, Similarity, SimHash64}
+import graft.scale.{Bounded, Dedup, Partitioning, Similarity, SimHash64}
 import graft.functions.TextAnalysis
 
 /** Scale-tier queries: deduplication, similarity search, token/fingerprint
@@ -1761,10 +1761,10 @@ object ScaleQueries {
     // (CellPairsExpr: identical commuted IEEE dot/den, identical 1e6
     // snap, pair-once by v1 < v2). The salt knob is result-identical
     // task splitting for the JOIN shape and is simply unused here.
-    if (emb.count() <= graft.scale.CellTopK.budget(spark)) {
-      val collected = assigned
-        .select(col("cluster"), col("vec_id"), col("embedding")).collect()
-      val bc = spark.sparkContext.broadcast(graft.scale.CellTopK.buildTable(collected))
+    // The broadcast is left to ContextCleaner: the returned relation is
+    // lazy, so the consuming action runs after this function returns.
+    if (Bounded.fits(spark, Bounded.CellTableRows)(emb.count())) {
+      val bc = graft.scale.CellTopK.broadcastTable(assigned)
       return assigned.select(col("cluster"), col("vec_id").as("v1"),
           graft.scale.CellTopK.pairsColumn(bc, SemDedupTau,
             col("cluster"), col("vec_id"), col("embedding")).as("ps"))
@@ -1819,16 +1819,6 @@ object ScaleQueries {
     * default; BASELINE.md "sf10 stress" records the measured fixed-k
     * cost at 200k vectors and the cells-raised arm.
     */
-  /** Broadcast cell-table budget in VECTORS for the expression-kernel
-    * kNN path (conf `spark.graft.knn.cellTableRows`, 0 disables): 1M
-    * 64-dim float vectors ≈ 256 MB flat — the same memory class as the
-    * broadcast join it replaces (which ships the identical relation as
-    * a hash table). Past the budget the join+TopKAgg pipeline below is
-    * unchanged; beyond BROADCAST size entirely, the salted-slice shuffle
-    * arm (ABBench) / IVF-PQ tier remain the documented escalation.
-    */
-  val KnnCellTableRowsDefault: Long = graft.scale.CellTopK.DefaultTableRows
-
   def knnGraph(spark: SparkSession, dir: String, cells: Int = KmeansK): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val trained = graft.scale.KMeans.fit(emb, cells, iters = 1)
@@ -1841,28 +1831,8 @@ object ScaleQueries {
     // in one tight loop over a flat-float cell table instead
     // (scale/CellTopK.scala: bit-identical snapped cosines, identical
     // (score desc, id asc) selection, same output schema).
-    val knnBudget = spark.conf
-      .get("spark.graft.knn.cellTableRows", KnnCellTableRowsDefault.toString).toLong
-    if (emb.count() <= knnBudget) {
-      val collected = asg
-        .select(col("cluster"), col("vec_id"), col("embedding")).collect()
-      val bc = spark.sparkContext.broadcast(graft.scale.CellTopK.buildTable(collected))
-      // EAGER checkpoint: the kernel runs exactly once, as a plain
-      // projection job (measured stable: 40 s × 3 reps at sf10).
-      // Running it inside a consumer's InMemoryRelation cache build
-      // instead was ERRATIC (q_pagerank reps 52/102/183 s, same work) —
-      // the columnar cache builder wraps the kernel's iterator in
-      // batch-unroll memory accounting; checkpointing hands consumers a
-      // materialized edge RDD, so persists/caches downstream store
-      // Θ(edges) rows, never re-driving the kernel.
-      return asg.select(col("cluster"), col("vec_id"),
-          graft.scale.CellTopK.topKColumn(bc, KnnGraphK,
-            col("cluster"), col("vec_id"), col("embedding")).as("top"))
-        .select(col("cluster"), col("vec_id"), posexplode(col("top")).as(Seq("rank0", "e")))
-        .select(col("cluster"), col("vec_id"), (col("rank0") + 1).as("rank"),
-          col("e.id").as("nbr_id"), col("e.score").as("cos_sim"))
-        .localCheckpoint()
-    }
+    if (Bounded.fits(spark, Bounded.CellTableRows)(emb.count()))
+      return cellTopKEdges(asg, asg, "vec_id", "embedding", "nbr_id")
     // the cell id alone has only KmeansK distinct values, so a plain
     // shuffle equi-join runs the whole n²/K pair volume through K tasks
     // (observed at sf1: 8 tasks carried 50M pairs, 26-82 s). BROADCAST
@@ -1894,6 +1864,31 @@ object ScaleQueries {
       .select(col("cluster"), col("vec_id"), posexplode(col("top")).as(Seq("rank0", "e")))
       .select(col("cluster"), col("vec_id"), (col("rank0") + 1).as("rank"),
         col("e.id").as("nbr_id"), col("e.score").as("cos_sim"))
+  }
+
+  /** Exact in-cell top-[[KnnGraphK]] of every `probe` row against the
+    * cell table of `table`, as (cluster, id, rank, nbr, cos_sim) edges.
+    * EAGER checkpoint: the kernel runs exactly once, as a plain
+    * projection job (measured stable: 40 s × 3 reps at sf10). Running it
+    * inside a consumer's InMemoryRelation cache build instead was
+    * ERRATIC (q_pagerank reps 52/102/183 s, same work) — the columnar
+    * cache builder wraps the kernel's iterator in batch-unroll memory
+    * accounting; checkpointing hands consumers a materialized edge RDD,
+    * so persists/caches downstream store Θ(edges) rows, never re-driving
+    * the kernel. The checkpoint holds the rows, so the table is
+    * destroyed right after it.
+    */
+  private def cellTopKEdges(table: DataFrame, probe: DataFrame,
+      id: String, emb: String, nbr: String): DataFrame = {
+    val bc = graft.scale.CellTopK.broadcastTable(table)
+    val out = probe.select(col("cluster"), col(id),
+        graft.scale.CellTopK.topKColumn(bc, KnnGraphK, col("cluster"), col(id), col(emb)).as("top"))
+      .select(col("cluster"), col(id), posexplode(col("top")).as(Seq("rank0", "e")))
+      .select(col("cluster"), col(id), (col("rank0") + 1).as("rank"),
+        col("e.id").as(nbr), col("e.score").as("cos_sim"))
+      .localCheckpoint()
+    bc.destroy()
+    out
   }
 
   val knnGraphSql: String =
@@ -1966,30 +1961,20 @@ object ScaleQueries {
     // flat-float table (the SAME relation the join below broadcasts as a
     // hash table) and each delta row's exact top-k is one tight loop, no
     // candidate pair row ever exists. Two certificates, both checked by
-    // construction: the table budget (emb.count ≤ cellTableRows), and
+    // construction: the table budget (history rows ≤ CellTableRows), and
     // id-space disjointness — the kernel's `id != probeId` self-exclusion
     // must never fire here (the join keeps the origin vector, cos = 1.0),
-    // so every collected history id must sit below the 1e6 delta offset.
+    // so every history id must sit below the 1e6 delta offset. One
+    // aggregate certifies both BEFORE anything is collected; an id past
+    // the offset makes the certificate exceed any budget, and an empty
+    // history (null max) certifies trivially.
     // Numerics are bit-identical (CellTopK scaladoc): commuted IEEE
     // dot/den, same 1e6 snap, same (score desc, id asc) selection.
-    val knnBudget = spark.conf
-      .get("spark.graft.knn.cellTableRows", KnnCellTableRowsDefault.toString).toLong
-    if (emb.count() <= knnBudget) {
-      val collected = hist
-        .select(col("cluster"), col("vec_id"), col("embedding")).collect()
-      if (collected.forall(_.getLong(1) < 1000000L)) {
-        val bc = spark.sparkContext.broadcast(graft.scale.CellTopK.buildTable(collected))
-        // eager checkpoint: kernel runs once as a plain projection job
-        // (never inside a consumer's InMemoryRelation build — CLAUDE.md)
-        return delta.select(col("cluster"), col("q_id"),
-            graft.scale.CellTopK.topKColumn(bc, KnnGraphK,
-              col("cluster"), col("q_id"), col("q_emb")).as("top"))
-          .select(col("cluster"), col("q_id"), posexplode(col("top")).as(Seq("rank0", "e")))
-          .select(col("cluster"), col("q_id"), (col("rank0") + 1).as("rank"),
-            col("e.id").as("vec_id"), col("e.score").as("cos_sim"))
-          .localCheckpoint()
-      }
+    val fits = Bounded.fits(spark, Bounded.CellTableRows) {
+      val c = emb.agg(count(lit(1)), max(col("vec_id"))).head()
+      if (c.isNullAt(1) || c.getLong(1) < 1000000L) c.getLong(0) else Long.MaxValue
     }
+    if (fits) return cellTopKEdges(hist, delta, "q_id", "q_emb", "vec_id")
     val den = col("nrm") * col("q_nrm")
     hist.join(broadcast(delta), Seq("cluster"))
       .select(col("cluster"), col("q_id"), col("vec_id"),
@@ -2133,16 +2118,6 @@ object ScaleQueries {
     * degrees, orientation, and the wedge join all reuse it, and Catalyst
     * does not CSE logical branches (CLAUDE.md rule).
     */
-  /** Driver triangle-count budget in UNDIRECTED edges (conf
-    * `spark.graft.triangles.collectEdges`, 0 disables). Wedge work is
-    * Σ outdeg² ≤ m^1.5 under degree orientation, so 300k edges bounds
-    * the driver at ~1.6e8 hash probes worst-case (sub-second); the kNN
-    * graphs this runs on are far below that (Θ(n·k²) wedges). Past the
-    * budget the three-shuffle distributed triad join below is unchanged
-    * (the sf10 graph exceeds it).
-    */
-  val TriCollectEdgesDefault = 300000L
-
   /** Exact triangle census on the driver for a certified-bounded edge
     * set (the dupClusters union-find precedent): identical
     * degree-ordered orientation, so each triangle is counted once at
@@ -2204,12 +2179,8 @@ object ScaleQueries {
     // triad pipeline (two endpoint joins + wedge self-join + closing
     // join + three rollup aggregates, ~10 exchanges of fixed overhead
     // on a Θ(n·k) relation) collapses to one collect.
-    val triBudget = und.sparkSession.conf
-      .get("spark.graft.triangles.collectEdges", TriCollectEdgesDefault.toString)
-      .toLong
-    val allLong = und.schema.fields.forall(_.dataType ==
-      org.apache.spark.sql.types.LongType)
-    if (allLong && und.count() <= triBudget) {
+    if (Bounded.allLong(und, "a", "b") &&
+        Bounded.fits(und.sparkSession, Bounded.TriangleEdges)(und.count())) {
       val out = triangleStatsLocal(und.sparkSession, und.collect())
       und.unpersist()
       return out

@@ -278,21 +278,6 @@ object Dedup {
     * Θ(frontier) each, so a hundred shallow rounds beat any clever
     * squared-stats join.
     */
-  /** Driver union-find budget, in DIRECTED (symmetrized) edges — the
-    * number `edges.count()` measures; the collected half (a ≤ b) is
-    * budget/2 tuples, ~40 B each (≤ ~80 MB transient at the default).
-    * Override with spark conf `spark.graft.cc.collectEdges`; 0 disables
-    * the collected path entirely (the loud-cap test uses this).
-    *
-    * Why 4M: at sf0.1 the LSH dup graphs are ~10⁴–10⁵ directed edges and
-    * the DBSCAN quotient graph ~10⁴ — far under budget — while the sf10
-    * LSH corpus measured 54.6 M directed edges (r9 sweep), well over, so
-    * the delta-frontier loop (the 100 TB story) remains the path wherever
-    * the graph is NOT certifiably driver-sized. The budget bounds driver
-    * memory by construction, not by testdata accident.
-    */
-  val CcCollectEdgesDefault = 4000000L
-
   /** Exact min-label connected components on the driver for a
     * certified-bounded edge set (VERDICT r12 #1): one collect job over
     * the already-persisted edges replaces ~diameter driver-scheduled
@@ -368,14 +353,11 @@ object Dedup {
     // loud-cap delta-frontier loop below stays the uncertified-premise
     // path: past the budget (54.6 M directed edges at the sf10 LSH
     // corpus) nothing is collected and the 100 TB shape is unchanged.
-    val ccBudget = edges.sparkSession.conf
-      .get("spark.graft.cc.collectEdges", CcCollectEdgesDefault.toString).toLong
-    val allLong = edges.schema.fields.forall(_.dataType ==
-      org.apache.spark.sql.types.LongType)
-    if (allLong && nEdges <= ccBudget) {
+    if (Bounded.allLong(edges, "a", "b") &&
+        Bounded.fits(edges.sparkSession, Bounded.CcEdges)(nEdges)) {
       val out = unionFindLabels(edges)
       edges.unpersist()
-      println(s"[cc] dupClusters union-find edges=$nEdges budget=$ccBudget")
+      println(s"[cc] dupClusters union-find edges=$nEdges budget=${Bounded.CcEdges}")
       return out
     }
     var labels = edges.select(col("a").as("node")).distinct()

@@ -97,19 +97,21 @@ object Similarity {
     * crossJoin, no groupBy): zero shuffles before the bucket join itself.
     */
   def lshSignature(embeddings: DataFrame, planeIds: Seq[Long]): DataFrame = {
-    val planes: Seq[(Long, Seq[Double])] = embeddings
-      .filter(col("vec_id").isInCollection(planeIds))
-      .select(col("vec_id"), col("embedding"))
-      .collect()
-      .map(r => r.getLong(0) ->
-        r.getSeq[Float](1).map(_.toDouble).toSeq)
-      .sortBy(_._1).toSeq
-    val bits = planes.map { case (_, pe) =>
+    val bits = planeVectors(embeddings, planeIds).map { pe =>
       when(dot(col("embedding"), typedLit(pe)) >= 0, "1").otherwise("0")
     }
     embeddings.select(col("vec_id"),
       concat(bits: _*).as("bucket"))
   }
+
+  /** The hyperplanes: embeddings of the plane ids present, in id order. */
+  private def planeVectors(embeddings: DataFrame, planeIds: Seq[Long]): Seq[Seq[Double]] =
+    embeddings
+      .filter(col("vec_id").isInCollection(planeIds))
+      .select(col("vec_id"), col("embedding"))
+      .collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toSeq)
+      .sortBy(_._1).map(_._2).toSeq
 
   /** Approximate top-k: candidates share the query's LSH bucket. */
   def lshTopK(embeddings: DataFrame, queryId: Long, planeIds: Seq[Long], k: Int): DataFrame = {
@@ -140,23 +142,17 @@ object Similarity {
     // are the exact lshSignature expressions (dot(embedding, plane) >= 0
     // per plane in sorted-pid order); the int encoding Σ bitᵢ·2ⁱ is a
     // bijection of the concat-string bucket, so the pair partition is
-    // identical by construction.
-    val sparkSess = embeddings.sparkSession
-    if (embeddings.count() <= CellTopK.budget(sparkSess)) {
-      val planes: Seq[(Long, Seq[Double])] = embeddings
-        .filter(col("vec_id").isInCollection(planeIds))
-        .select(col("vec_id"), col("embedding"))
-        .collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toSeq)
-        .sortBy(_._1).toSeq
-      val bucketInt = planes.zipWithIndex.map { case ((_, pe), i) =>
+    // identical by construction. With no plane rows both encodings give
+    // ONE bucket (Σ over nothing = 0; concat of nothing = "").
+    // The broadcast is left to ContextCleaner: the returned relation is
+    // lazy, so the consuming action runs after this function returns.
+    if (Bounded.fits(embeddings.sparkSession, Bounded.CellTableRows)(embeddings.count())) {
+      val bucketInt = planeVectors(embeddings, planeIds).zipWithIndex.map { case (pe, i) =>
         when(dot(col("embedding"), typedLit(pe)) >= 0, lit(1 << i)).otherwise(lit(0))
-      }.reduce(_ + _).cast("int")
+      }.foldLeft(lit(0))(_ + _).cast("int")
       val withB = embeddings.select(col("vec_id"), col("embedding"),
         bucketInt.as("bucket"))
-      val collected = withB
-        .select(col("bucket"), col("vec_id"), col("embedding")).collect()
-      val bc = sparkSess.sparkContext.broadcast(CellTopK.buildTable(collected))
+      val bc = CellTopK.broadcastTable(withB, cell = "bucket")
       return withB.select(col("vec_id").as("v1"),
           CellTopK.pairsColumn(bc, threshold,
             col("bucket"), col("vec_id"), col("embedding")).as("ps"))

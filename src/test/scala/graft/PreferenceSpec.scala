@@ -167,11 +167,10 @@ class PreferenceSpec extends AnyFunSuite {
       df.collect().map(_.toSeq).toSet
     val localR = set(Preference.btRatingOf(games))
     val localSe = set(Preference.btRatingSeOf(games))
-    spark.conf.set("spark.graft.bt.collectPairs", "0")
-    try {
+    Spark.withFallback {
       assert(localR == set(Preference.btRatingOf(games)))
       assert(localSe == set(Preference.btRatingSeOf(games)))
-    } finally spark.conf.unset("spark.graft.bt.collectPairs")
+    }
   }
 
   test("rating SEs: symmetry, games-monotonicity, and the winless NULL") {

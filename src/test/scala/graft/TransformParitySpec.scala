@@ -24,6 +24,16 @@ object Spark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Run `body` with every certified-bounded driver fast path off, on the
+    * active session (this one in the specs, ABBench's in its main): each
+    * gated site takes its distributed fallback.
+    */
+  def withFallback[T](body: => T): T = {
+    val s = SparkSession.getActiveSession.getOrElse(session)
+    s.conf.set(graft.scale.Bounded.Switch, "false")
+    try body finally s.conf.unset(graft.scale.Bounded.Switch)
+  }
 }
 
 class TransformParitySpec extends AnyFunSuite {
